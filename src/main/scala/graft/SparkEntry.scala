@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.build.IndexBuilder
 import graft.search.Searcher
+import graft.search.Searcher.Where
 
 /** Driver contract — each `queries` entry returns a DataFrame over the
   * parquet tables in `sfDir`; `oracleSql` holds the equivalent DuckDB SQL
@@ -181,7 +182,7 @@ object SparkEntry {
     def searcherH(s: SparkSession, sfDir: String): Searcher = of(s, sfDir, "simple", "hash")
     /** multi-column variant: fields (text, lang) with field-prefixed keys;
       * n_chars attached + alt-order layout so ranked/ordered scans
-      * (topKCoverMulti / topKAddonMulti) are served too.
+      * (topKCover / topKAddon over Where.Fields) are served too.
       */
     /** signed-addon + empty-doc variant: every (n_chars %% 7 == 0) doc's
       * text is nulled (deterministic; indexes as an empty doc), attach =
@@ -395,8 +396,9 @@ object SparkEntry {
         IndexCache.searcherF(s, dir).topKAddon("zzzgraftwarm", 0L, "both", 1).count()),
       "searcherM" -> (() => {
         val m = IndexCache.searcherM(s, dir)
-        m.countMulti(Seq("text" -> "zzzgraftwarm"))
-        m.topKAddonMulti(Seq("text" -> "zzzgraftwarm"), 0L, "both", 1).count()
+        val warm = Where.Fields(Seq("text" -> "zzzgraftwarm"))
+        m.count(warm)
+        m.topKAddon(warm, 0L, "both", 1).count()
       }),
       // the token-table materializations split into independent subchains
       // (every chain re-states its dependencies; MatCache's computeIfAbsent
@@ -485,13 +487,11 @@ object SparkEntry {
     }),
     "ft_count_batch" -> ((s, dir) => {
       // msearch counts: three boolean queries answered by ONE action
-      // (Searcher.countBatch) — each slot's count must equal the
+      // (Searcher.msearchCounts) — each slot's count must equal the
       // stand-alone query's count (oracle = union of the per-slot SQL)
-      val qs = Seq("order & merge", "vector | stream", "!merge & order")
-      val counts = IndexCache.searcher(s, dir).countBatch(qs)
-      qs.zipWithIndex.map { case (q, i) =>
-        s.range(1).select(lit(i).as("qi"), lit(counts(q)).as("cnt"))
-      }.reduce(_.union(_))
+      IndexCache.searcher(s, dir)
+        .msearchCounts(Seq("order & merge", "vector | stream", "!merge & order"))
+        .orderBy("qi")
     }),
     "ft_count_or" -> ((s, dir) => {
       val r = IndexCache.searcher(s, dir).count("vector | stream")
@@ -580,13 +580,14 @@ object SparkEntry {
         .select(col("docId").as("doc_id"), col("score"), col("rank"))
     }),
     "ft_topk_bm25_batch" -> ((s, dir) => {
-      // msearch: two ranked queries served by ONE Spark job (tagged union
-      // of cached branch plans — Searcher.topKBm25Batch); qi is the batch
-      // slot. Same rounding-tie discipline as ft_topk_bm25 but with a
-      // deeper margin (fetch 40, round, re-rank per slot, keep 10): these
-      // common terms cluster scores harder than the single-query set.
-      IndexCache.searcher(s, dir).topKBm25Batch(Seq(
-          (Seq("merge", "window", "vector"), 40), (Seq("stream", "data", "hash"), 40)))
+      // msearch: two ranked queries served by ONE fused Spark job
+      // (Searcher.msearch Bm25 slots); qi is the batch slot. Same
+      // rounding-tie discipline as ft_topk_bm25 but with a deeper margin
+      // (fetch 40, round, re-rank per slot, keep 10): these common terms
+      // cluster scores harder than the single-query set.
+      import graft.search.Searcher.MsearchSpec.Bm25
+      IndexCache.searcher(s, dir).msearch(Seq(
+          Bm25(Seq("merge", "window", "vector"), 40), Bm25(Seq("stream", "data", "hash"), 40)))
         .withColumn("score", round(col("score"), 4))
         .withColumn("rank", row_number().over(
           Window.partitionBy("qi").orderBy(col("score").desc, col("docId"))))
@@ -616,7 +617,7 @@ object SparkEntry {
       // kernel pass over field-prefixed keys (attnum prefix analogue,
       // src/rumutil.c:266-288); prefix search stays field-scoped
       IndexCache.searcherM(s, dir)
-        .matchingDocsMulti(Seq("text" -> "merge & win:*", "lang" -> "en | de"))
+        .matchingDocs(Where.Fields(Seq("text" -> "merge & win:*", "lang" -> "en | de")))
         .select(col("docId").as("doc_id")).orderBy("doc_id")
     }),
     "ft_multicol_rank" -> ((s, dir) => {
@@ -625,7 +626,7 @@ object SparkEntry {
       // text @@ 'order & window' AND lang @@ 'en' in one kernel pass over
       // field-prefixed keys; rank by cover-density of the TEXT query alone
       IndexCache.searcherM(s, dir)
-        .topKCoverMulti("text", "order & window", Seq("lang" -> "en"), 10)
+        .topKCover(Where.Fields(Seq("text" -> "order & window", "lang" -> "en")), 10)
         .withColumn("distance", round(col("distance"), 4))
         .select(col("docId").as("doc_id"), col("distance"))
         .orderBy("distance", "doc_id")
@@ -635,7 +636,7 @@ object SparkEntry {
       // (text predicate + ORDER BY d <=> c on one multicolumn index);
       // served from the alt-order layout with early termination
       IndexCache.searcherM(s, dir)
-        .topKAddonMulti(Seq("text" -> "merge & window", "lang" -> "en | de"),
+        .topKAddon(Where.Fields(Seq("text" -> "merge & window", "lang" -> "en | de")),
           600L, "both", 10)
         .select(col("docId").as("doc_id"), col("addon").as("n_chars"),
           col("distance").cast("long").as("dist"))
@@ -644,7 +645,7 @@ object SparkEntry {
       // field-scoped BM25 over the multicolumn index: stats and doc lens
       // come from the text field's own prefixed key space
       IndexCache.searcherM(s, dir)
-        .topKBm25Fields("text", Seq("merge", "window", "vector"), 20)
+        .topKBm25(Seq("merge", "window", "vector"), 20, field = Some("text"))
         .withColumn("score", round(col("score"), 4))
         .orderBy(col("score").desc, col("docId"))
         .limit(10)
@@ -659,9 +660,9 @@ object SparkEntry {
       // re-rank, keep 10)
       import graft.search.Searcher.MsearchSpec._
       val m = IndexCache.searcherM(s, dir).msearch(Seq(
-        MatchFields(Seq("text" -> "merge & win:*", "lang" -> "en | de")),
-        CoverFields("text", "order & window", Seq("lang" -> "en"), 10),
-        Bm25Fields("text", Seq("merge", "window", "vector"), 20)))
+        Match(Where.Fields(Seq("text" -> "merge & win:*", "lang" -> "en | de"))),
+        Cover(Where.Fields(Seq("text" -> "order & window", "lang" -> "en")), 10),
+        Bm25(Seq("merge", "window", "vector"), 20, field = Some("text"))))
       val s0 = m.where(col("qi") === 0)
         .select(col("qi"), col("docId"), lit(0.0).as("score"))
       val s1 = m.where(col("qi") === 1)
@@ -873,14 +874,14 @@ object SparkEntry {
         .orderBy("qi", "bucket")
     }),
     "ft_msearch_empty" -> ((s, dir) => {
-      // INCLUDE_EMPTY inside a fused batch: CountEmpty/MatchEmpty slots
+      // INCLUDE_EMPTY inside a fused batch: Count/Match slots over Where.Empty
       // push the reserved placeholder key down the shared scan next to an
       // ordinary count slot (searcherS nulls text for n_chars % 7 == 0)
       import graft.search.Searcher.MsearchSpec._
       IndexCache.searcherS(s, dir).msearch(Seq(
-          CountEmpty(None),
+          Count(Where.Empty()),
           Count("merge & window"),
-          MatchEmpty(None)))
+          Match(Where.Empty())))
         .select(col("qi"), col("docId").as("key"),
           col("score").cast("long").as("val"))
         .orderBy("qi", "key")
@@ -929,7 +930,7 @@ object SparkEntry {
       // placeholder key (INCLUDE_EMPTY, src/rumscan.c:144-151) — the plan
       // is a one-key postings scan, no corpus read; searcherS nulls text
       // for every n_chars % 7 == 0 doc
-      IndexCache.searcherS(s, dir).matchingEmpty()
+      IndexCache.searcherS(s, dir).matchingDocs(Where.Empty())
         .agg(count(lit(1)).as("cnt"))
     }),
     "ft_df" -> ((s, dir) => {

@@ -88,10 +88,11 @@ object IndexBuilder {
     * count UNIQ rank norms divide by) — so v4 pins the uniq-carrying schema
     * and ALL v3 indexes require rebuild, including ones that happen to carry
     * the column. Version 5 adds the reserved empty-item placeholder key
-    * ([[EmptyToken]]): a v4 index would silently answer `matchingEmpty`
-    * with zero rows, so it requires rebuild too. Readers and incremental
-    * writers refuse other versions up front — a missing column/key must
-    * surface as "rebuild required", not a wrong answer mid-query.
+    * ([[EmptyToken]]): a v4 index would silently answer
+    * `Searcher.Where.Empty` queries with zero rows, so it requires rebuild
+    * too. Readers and incremental writers refuse other versions up front —
+    * a missing column/key must surface as "rebuild required", not a wrong
+    * answer mid-query.
     */
   val CurrentFormat = 5
 
@@ -135,6 +136,10 @@ object IndexBuilder {
         * and epoch-spanning timestamps order correctly.
         */
       altOrder: Boolean = false) {
+    // a zero or negative block size would fail deep inside the posting
+    // packer (PostingListBuilder) instead of at the API boundary
+    require(blockSize > 0, s"blockSize must be positive: $blockSize")
+
     def hash: String = {
       // v6: empty-item placeholder key (format 5)
       val s = s"v6|$nShards|$blockSize|$maxPostingsPerChunk|$tokenizer|${attach.getOrElse("")}|$keyKind|$altOrder"
@@ -212,18 +217,6 @@ object IndexBuilder {
     case "simple" => (t: String) => Tokenizer.simple(if (t == null) "" else t)
     case "code" => (t: String) => Tokenizer.code(if (t == null) "" else t)
     case "simple_title8" => (t: String) => Tokenizer.simpleTitle(if (t == null) "" else t, 8)
-    case other => throw new IllegalArgumentException(s"unknown tokenizer: $other")
-  }
-
-  private def tokenCountFn(name: String): String => Int = name match {
-    case "simple" | "simple_title8" => (t: String) => Tokenizer.simpleCount(if (t == null) "" else t)
-    case "code" => (t: String) => Tokenizer.codeCount(if (t == null) "" else t)
-    case other => throw new IllegalArgumentException(s"unknown tokenizer: $other")
-  }
-
-  private def uniqueCountFn(name: String): String => Int = name match {
-    case "simple" | "simple_title8" => (t: String) => Tokenizer.simpleUniqueCount(if (t == null) "" else t)
-    case "code" => (t: String) => Tokenizer.codeUniqueCount(if (t == null) "" else t)
     case other => throw new IllegalArgumentException(s"unknown tokenizer: $other")
   }
 
@@ -306,21 +299,26 @@ object IndexBuilder {
         col("e.uniq").as("uniq"))
   }
 
-  /** Docs table derived from exploded posting tuples — equivalent to the
-    * per-doc count/uniq tokenize pass by construction: every entry of a doc
-    * carries the doc's total token count (`len`) and addon; `uniq`
-    * (distinct-lexeme count, the tsvector size UNIQ norms divide by) is the
-    * number of real-term entries, since the tokenizer emits exactly one
-    * entry per distinct raw term and the empty-doc placeholder entry is the
-    * only one with tf = 0.
+  /** Docs table derived from exploded posting tuples: their first-entry
+    * rows (uniq >= 0 — exactly one per doc and field by construction),
+    * which carry the doc's token count (`len`), addon and distinct-lexeme
+    * count (`uniq`, the tsvector size UNIQ norms divide by; the empty-doc
+    * placeholder entry carries 0). Single-field: a narrow filter +
+    * shard-pure repartition of ndocs rows, no corpus-sized aggregation.
+    * Multi-field: one row per doc per field, summed — total tokens and
+    * total distinct keys (a term in two fields is two distinct keys).
+    * Build and append share this one derivation.
     */
-  /** The docs table is the exploded tuples' first-entry rows (uniq >= 0 —
-    * exactly one per doc by construction): a narrow filter + shard-pure
-    * repartition of ndocs rows, no corpus-sized aggregation.
-    */
-  private def docsFromExploded(exploded: DataFrame, nShards: Int): DataFrame =
-    shardPure(exploded.where(col("uniq") >= 0)
-      .select("shard", "docId", "len", "addon", "uniq"), nShards)
+  private def docsFromExploded(exploded: DataFrame, nShards: Int,
+                               multiField: Boolean): DataFrame = {
+    val first = exploded.where(col("uniq") >= 0)
+    val docs =
+      if (!multiField) first
+      else first.groupBy(col("shard"), col("docId"))
+        .agg(sum("len").cast("int").as("len"), max("addon").as("addon"),
+          sum("uniq").cast("int").as("uniq"))
+    shardPure(docs.select("shard", "docId", "len", "addon", "uniq"), nShards)
+  }
 
   /** Route rows into exactly one partition per shard (preimage table, see
     * [[hashPreimages]]) so a partitionBy("shard") write emits ONE file per
@@ -337,17 +335,38 @@ object IndexBuilder {
     * get-or-compute serializes any racing partition materialization, and
     * Spark's FIFO scheduler back-fills one job's task tail with the next
     * job's tasks — build wall time becomes the max of the writes, not
-    * their sum). Exceptions propagate to the caller.
+    * their sum). Every Spark job they start carries one shared job tag:
+    * on the first failure the siblings' jobs are cancelled, so they abort
+    * their writes instead of committing files no manifest will reference,
+    * and the pool is drained before that first failure is rethrown.
     */
-  private def runConcurrently(jobs: Seq[() => Unit]): Unit = {
+  private[graft] def runConcurrently(spark: SparkSession, jobs: Seq[() => Unit]): Unit = {
     if (jobs.length <= 1) { jobs.foreach(_()); return }
+    val sc = spark.sparkContext
+    val tag = "graft-write-" + java.util.UUID.randomUUID()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(jobs.length)
     try {
-      jobs.map(j => pool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = j()
-      })).foreach { f =>
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      val done = new java.util.concurrent.ExecutorCompletionService[Unit](pool)
+      jobs.foreach(j => done.submit(() => {
+        sc.addJobTag(tag)
+        try j() finally sc.removeJobTag(tag)
+      }))
+      var finished = 0
+      var failure: Throwable = null
+      while (finished < jobs.length && failure == null) {
+        try done.take().get()
+        catch { case e: java.util.concurrent.ExecutionException => failure = e.getCause }
+        finished += 1
+      }
+      if (failure != null) {
+        // a sibling may start its next job after a cancel: repeat until
+        // every sibling has returned
+        while (finished < jobs.length) {
+          sc.cancelJobsWithTag(tag)
+          if (done.poll(100, java.util.concurrent.TimeUnit.MILLISECONDS) != null)
+            finished += 1
+        }
+        throw failure
       }
     } finally pool.shutdown()
   }
@@ -641,7 +660,7 @@ object IndexBuilder {
     var shardsMeta: List[ShardMeta] = Nil
     var numDocs = 0L
     var totalTokens = 0L
-    runConcurrently(Seq(
+    runConcurrently(spark, Seq(
       () => allPostings.groupBy("term")
         .agg(sum("ndocs").as("df"), max("maxTf").as("maxTf"))
         .write.mode("append").parquet(statsDirPath),
@@ -731,15 +750,6 @@ object IndexBuilder {
       }
     }
 
-    // env-gated phase timing (diagnostics only): SPARK_GRAFT_BUILD_PHASES=1
-    // prints per-phase wall seconds to stderr
-    val tPhase = new java.util.concurrent.atomic.AtomicLong(System.nanoTime())
-    def phase(name: String): Unit =
-      if (sys.env.contains("SPARK_GRAFT_BUILD_PHASES")) {
-        val now = System.nanoTime()
-        val prev = tPhase.getAndSet(now)
-        System.err.println(f"[build-phase] $name: ${(now - prev) / 1e9}%.3fs")
-      }
     val packAcc = newPackAcc(spark)
     // tokenize ONCE: the exploded posting tuples are materialized and all
     // downstream consumers (primary pack, alt-order pack, docs table) read
@@ -751,20 +761,15 @@ object IndexBuilder {
     val exploded = explodedOf(todo, params).persist()
     try {
       if (remaining.nonEmpty) {
-        phase("setup")
-        // diagnostics only: isolate tokenize+cache-materialization cost
-        if (sys.env.contains("SPARK_GRAFT_BUILD_PHASES")) {
-          exploded.count()
-          phase("tokenize+cache materialization")
-        }
         // docs table: the exploded tuples' first-entry rows — no second
         // corpus read; see docsFromExploded
-        val docsDF = docsFromExploded(exploded, params.nShards).persist()
+        val docsDF = docsFromExploded(exploded, params.nShards, multiField = false)
+          .persist()
         docsOpt = Some(docsDF)
         // the three writes are independent jobs over the shared tuple
         // cache (different output directories) — run them concurrently so
         // the build pays max(write), not sum(write)
-        runConcurrently(Seq(
+        runConcurrently(spark, Seq(
           () => packDataset(spark, exploded, params, packAcc = Some(packAcc))
             .write.mode("append").partitionBy("shard")
             .parquet(SegmentCatalog.postingsDir(indexDir))) ++
@@ -776,7 +781,6 @@ object IndexBuilder {
           else Nil) ++
           Seq(() => docsDF.write.mode("append").partitionBy("shard")
             .parquet(SegmentCatalog.docsDir(indexDir))))
-        phase("layout+docs writes (concurrent)")
       }
 
       val buildMs = System.currentTimeMillis() - t0
@@ -792,7 +796,6 @@ object IndexBuilder {
         dataFiles = currentListing(indexDir, params),
         shardMs = priorMs ++ packAccMs(packAcc),
         docsDS = if (fullWrite) docsOpt else None)
-      phase("refresh (stats+manifest)")
       committedMeta
     } finally {
       exploded.unpersist(blocking = false)
@@ -814,11 +817,10 @@ object IndexBuilder {
     * field-prefixed keys (the attnum key prefix of the reference's
     * multicolumn support, src/rumutil.c:266-288; tests
     * sql/orderby.sql:89-106). Queries go through
-    * [[graft.search.Searcher.compileMulti]], which ANDs per-field tsqueries
+    * [[graft.search.Searcher.Where.Fields]], which ANDs per-field tsqueries
     * into one kernel pass. Doc length = total tokens across fields.
-    * Incremental append is not supported on multi-column indexes (rebuild
-    * or compact instead); delete/compact work transparently since the
-    * field prefix rides inside the key.
+    * Incremental inserts go through [[appendFields]]; delete/compact work
+    * transparently since the field prefix rides inside the key.
     */
   def buildFields(spark: SparkSession, corpus: DataFrame, docIdCol: String,
                   fields: Seq[(String, String)], indexDir: String,
@@ -840,19 +842,10 @@ object IndexBuilder {
     val packAcc = newPackAcc(spark)
     var docsOpt: Option[DataFrame] = None
     try {
-      // docs table from the tuples' first-entry rows (one per doc PER
-      // FIELD, each carrying its field's len/uniq): summing over fields
-      // gives total tokens and total distinct keys — a term in two fields
-      // is two distinct keys, so the per-field counts sum by construction
-      val docsDF = exploded.where(col("uniq") >= 0)
-        .groupBy(col("shard"), col("docId"))
-        .agg(sum("len").cast("int").as("len"), max("addon").as("addon"),
-          sum("uniq").cast("int").as("uniq"))
-        .select("shard", "docId", "len", "addon", "uniq")
-        .transform(shardPure(_, params.nShards))
+      val docsDF = docsFromExploded(exploded, params.nShards, multiField = true)
         .persist()
       docsOpt = Some(docsDF)
-      runConcurrently(Seq(
+      runConcurrently(spark, Seq(
         () => packDataset(spark, exploded, params, packAcc = Some(packAcc))
           .write.mode("append").partitionBy("shard")
           .parquet(SegmentCatalog.postingsDir(indexDir))) ++
@@ -909,11 +902,7 @@ object IndexBuilder {
       s"multi-column index (fields=${meta.fields}): use appendFields")
     val params = paramsOf(meta)
     val todo = normalize(newCorpus, docIdCol, textCol, params)
-    val cntUdf = udf(tokenCountFn(params.tokenizer))
-    val uniqUdf = udf(uniqueCountFn(params.tokenizer))
-    val docsDF = todo.select(col("shard"), col("docId"), cntUdf(col("text")).as("len"),
-      col("addon"), uniqUdf(col("text")).as("uniq"))
-    commitAppend(spark, indexDir, meta, params, explodedOf(todo, params), docsDF,
+    commitAppend(spark, indexDir, meta, params, explodedOf(todo, params),
       s"append(${newCorpus.queryExecution.logical.toString.linesIterator.take(1).mkString})",
       batchId, autoCompactRuns)
   }
@@ -936,26 +925,18 @@ object IndexBuilder {
       explodedOf(normalize(newCorpus, docIdCol, colName, params), params,
         keyPrefix = fname + FieldSep)
     }.reduce(_ unionAll _)
-    val cntUdf = udf(tokenCountFn(params.tokenizer))
-    val uniqUdf = udf(uniqueCountFn(params.tokenizer))
-    val addonCol = addonColOf(params.attach, col(docIdCol).cast("long"))
-    val docsDF = newCorpus
-      .select(docIdColOf(docIdCol),
-        fields.map { case (_, c) => cntUdf(col(c)) }.reduce(_ + _).as("len"), addonCol,
-        fields.map { case (_, c) => uniqUdf(col(c)) }.reduce(_ + _).as("uniq"))
-      .withColumn("shard", pmod(xxhash64(col("docId")), lit(params.nShards)).cast("int"))
-      .select("shard", "docId", "len", "addon", "uniq")
-    commitAppend(spark, indexDir, meta, params, exploded, docsDF,
+    commitAppend(spark, indexDir, meta, params, exploded,
       s"appendFields(${fields.map(_._1).mkString(",")})", batchId, autoCompactRuns)
   }
 
   /** Shared micro-segment commit: pack+write postings (and alt copy),
-    * write docs, and commit the prior listing + exactly this write's new
-    * files — a crashed earlier append's orphan part files (written but
-    * never manifested) stay invisible forever.
+    * write docs (derived from the same tuples as a build's), and commit the
+    * prior listing + exactly this write's new files — a crashed earlier
+    * append's orphan part files (written but never manifested) stay
+    * invisible forever.
     */
   private def commitAppend(spark: SparkSession, indexDir: String, meta: IndexMeta,
-                           params: Params, exploded: DataFrame, docsDF: DataFrame,
+                           params: Params, exploded: DataFrame,
                            lineage: String, batchId: Long,
                            autoCompactRuns: Int): IndexMeta = {
     val t0 = System.currentTimeMillis()
@@ -968,11 +949,11 @@ object IndexBuilder {
     val (docsDisk, docsCommitted) = before("docs")
 
     val packAcc = newPackAcc(spark)
-    // micro-batch tuples are tokenized once and shared by both layout packs
-    // (appends on alt-order indexes would otherwise tokenize twice)
-    val shared = if (params.altOrder) exploded.persist() else exploded
+    // micro-batch tuples are tokenized once and shared by the layout
+    // packs and the docs table
+    val shared = exploded.persist()
     try {
-      runConcurrently(Seq(
+      runConcurrently(spark, Seq(
         () => packDataset(spark, shared, params, packAcc = Some(packAcc))
           .write.mode("append").partitionBy("shard")
           .parquet(SegmentCatalog.postingsDir(indexDir))) ++
@@ -982,9 +963,10 @@ object IndexBuilder {
             .write.mode("append").partitionBy("shard")
             .parquet(SegmentCatalog.altDir(indexDir)))
         else Nil) ++
-        Seq(() => shardPure(docsDF, params.nShards).write.mode("append")
+        Seq(() => docsFromExploded(shared, params.nShards, meta.fields.nonEmpty)
+          .write.mode("append")
           .partitionBy("shard").parquet(SegmentCatalog.docsDir(indexDir))))
-    } finally if (params.altOrder) shared.unpersist(blocking = false)
+    } finally shared.unpersist(blocking = false)
 
     val dataFiles = Map(
       "postings" -> (postCommitted ++

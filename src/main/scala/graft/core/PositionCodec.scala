@@ -75,6 +75,11 @@ object PositionCodec {
     * PG does — it clamps to MaxPos; we clamp likewise but must keep strict
     * monotonicity for the delta codec, so clamped tails collapse to a
     * single occurrence at MaxPos. Truncate to MaxNumPos entries.
+    *
+    * Requires `positions` strictly increasing (only the last one is checked
+    * against the caps). When nothing exceeds them, the INPUT arrays are
+    * returned as-is, aliased rather than copied: callers must not mutate
+    * either side afterwards.
     */
   def cap(positions: Array[Int], wclasses: Array[Byte]): (Array[Int], Array[Byte]) = {
     // fast path — nothing to cap (positions are strictly increasing, so

@@ -3,9 +3,11 @@ package graft.search
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.build.{DocRow, IndexMeta, PostingRow, SegmentCatalog}
+import graft.build.{DocRow, IndexBuilder, IndexMeta, PostingRow, SegmentCatalog}
 import graft.core.{PositionCodec, PostingBlock, PostingCursor}
 import graft.query._
+import graft.search.Searcher.{Where, whereKey}
+import scala.language.implicitConversions
 
 /** Query execution over a built index.
   *
@@ -111,7 +113,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * IndexBuilder.fieldKey(field, term).
     */
   private def keyOf(term: String): String = {
-    require(meta.fields.isEmpty || term.contains(graft.build.IndexBuilder.FieldSep),
+    require(meta.fields.isEmpty || term.contains(IndexBuilder.FieldSep),
       s"multi-column index (fields=${meta.fields}): qualify '$term' with " +
         "IndexBuilder.fieldKey(field, term)")
     if (meta.keyKind == "hash") graft.core.HashKeys.hex(term) else term
@@ -128,42 +130,65 @@ final class Searcher(spark: SparkSession, indexDir: String,
     } else CompiledQuery.compile(q)
   }
 
-  def compile(queryStr: String): CompiledQuery = {
-    require(meta.fields.isEmpty,
-      s"multi-column index (fields=${meta.fields}): use compileMulti/countMulti")
-    compileTree(TsQueryParser.parse(queryStr))
-  }
-
-  /** Multi-column query: one tsquery per field, ANDed into a single
-    * compiled tree over field-prefixed keys — one kernel pass intersects
-    * across fields (reference: attnum-prefixed entry keys,
-    * src/rumutil.c:266-288; multicolumn tests sql/orderby.sql:89-106).
-    */
-  def compileMulti(fieldQueries: Seq[(String, String)]): CompiledQuery = {
-    val known = meta.fields.split(",").toSet
+  private def requireField(f: String): Unit = {
     require(meta.fields.nonEmpty, "not a multi-column index")
-    val trees = fieldQueries.map { case (f, q) =>
-      require(known.contains(f), s"unknown field '$f' (have ${meta.fields})")
-      TsQuery.mapTerms(TsQueryParser.parse(q),
-        t => graft.build.IndexBuilder.fieldKey(f, t))
-    }
-    compileTree(trees.reduce(TsQuery.And(_, _)))
+    require(meta.fields.split(",").contains(f),
+      s"unknown field '$f' (have ${meta.fields})")
   }
 
-  def countMulti(fieldQueries: Seq[(String, String)]): Long =
-    runCount("countM" + Searcher.key(fieldQueries.flatMap(p => Seq(p._1, p._2)): _*),
-      matchingDocsMulti(fieldQueries))
+  /** One field's tsquery over that field's prefixed key space. */
+  private def fieldTree(fq: (String, String)): TsQuery = {
+    requireField(fq._1)
+    TsQuery.mapTerms(TsQueryParser.parse(fq._2), t => IndexBuilder.fieldKey(fq._1, t))
+  }
 
-  def matchingDocsMulti(fieldQueries: Seq[(String, String)]): DataFrame =
-    cached("matchM" + Searcher.key(fieldQueries.flatMap(p => Seq(p._1, p._2)): _*)) {
-      matchingDocsC(compileMulti(fieldQueries))
+  /** The keys a [[Searcher.Where]] reads, as one compiled tree: a tsquery
+    * over a single-column index; per-field tsqueries ANDed over
+    * field-prefixed keys, so one kernel pass intersects across fields
+    * (attnum-prefixed entry keys, src/rumutil.c:266-288); or the reserved
+    * empty-value placeholder key, an ordinary single leaf to the kernel
+    * (src/rum.h:205-211, INCLUDE_EMPTY src/rumscan.c:144-151).
+    */
+  def compile(w: Where): CompiledQuery = compileTree(w match {
+    case Where.Query(q) =>
+      require(meta.fields.isEmpty,
+        s"multi-column index (fields=${meta.fields}): query with Where.Fields")
+      TsQueryParser.parse(q)
+    case Where.Fields(fq) =>
+      require(fq.nonEmpty, "Where.Fields needs at least one (field, query)")
+      fq.map(fieldTree).reduce(TsQuery.And(_, _))
+    case Where.Empty(Some(f)) =>
+      requireField(f)
+      TsQuery.Lexeme(IndexBuilder.fieldKey(f, IndexBuilder.EmptyToken))
+    case Where.Empty(None) =>
+      require(meta.fields.isEmpty,
+        s"multi-column index (fields=${meta.fields}): pass the field")
+      TsQuery.Lexeme(IndexBuilder.EmptyToken)
+  })
+
+  /** (cq, scoreCq, scoreMap) for cover ranking: a [[Searcher.Where.Fields]]
+    * with filters ranks by its FIRST pair's query alone, the other fields
+    * being boolean filters (sql/orderby.sql:89-106); scoreCq key j reads
+    * the positions of cq key scoreMap(j). scoreCq = null ranks cq itself.
+    */
+  private def compileRanked(w: Where): (CompiledQuery, CompiledQuery, Array[Int]) = {
+    val cq = compile(w)
+    w match {
+      case Where.Fields(fq) if fq.length > 1 =>
+        val scoreCq = compileTree(fieldTree(fq.head))
+        val scoreMap = scoreCq.keys.map(sk =>
+          cq.keys.indexWhere(fk => fk.term == sk.term && fk.prefix == sk.prefix))
+        require(scoreMap.forall(_ >= 0), "rank keys must appear in the full query")
+        (cq, scoreCq, scoreMap)
+      case _ => (cq, null, null)
     }
+  }
 
   /** docIds matching the query (the bitmap-scan sink, rumgetbitmap —
     * src/rumget.c:2105-2145). Unordered.
     */
-  def matchingDocs(queryStr: String): DataFrame =
-    cached("match" + Searcher.key(queryStr))(matchingDocsC(compile(queryStr)))
+  def matchingDocs(w: Where): DataFrame =
+    cached("match" + whereKey(w))(matchingDocsC(compile(w)))
 
   private def matchingDocsC(cq: CompiledQuery): DataFrame = {
     if (SearchKernel.isVoid(cq)) // empty tsquery: no scan at all (isVoidRes)
@@ -180,8 +205,8 @@ final class Searcher(spark: SparkSession, indexDir: String,
     }
   }
 
-  def count(queryStr: String): Long =
-    runCount("count" + Searcher.key(queryStr), matchingDocs(queryStr))
+  def count(w: Where): Long =
+    runCount("count" + whereKey(w), matchingDocs(w))
 
   /** Cached count: Dataset.count() would plan a fresh Aggregate per call,
     * so the aggregate itself is part of the cached plan.
@@ -198,13 +223,13 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * md5-prefix hash the SQL oracle can compute, so sampling is
     * reproducible across engines AND executors (no RNG state).
     */
-  def matchingDocsSampled(queryStr: String, limit: Long): DataFrame =
-    cached("sampled" + Searcher.key(queryStr, limit.toString)) {
-      matchingDocsSampledU(queryStr, limit)
+  def matchingDocsSampled(w: Where, limit: Long): DataFrame =
+    cached("sampled" + Searcher.key(limit.toString) + whereKey(w)) {
+      matchingDocsSampledU(w, limit)
     }
 
-  private def matchingDocsSampledU(queryStr: String, limit: Long): DataFrame = {
-    val cq = compile(queryStr)
+  private def matchingDocsSampledU(w: Where, limit: Long): DataFrame = {
+    val cq = compile(w)
     val full = matchingDocsC(cq)
     val predicted = predictResults(cq)
     if (predicted <= limit) full
@@ -239,8 +264,8 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * (RUM addon ops, README.md:158-196). Feed this to Column expressions
     * for distance ordering / range predicates on the attached column.
     */
-  def matchingWithAddon(queryStr: String): DataFrame =
-    cached("addon" + Searcher.key(queryStr))(matchingWithAddonC(compile(queryStr)))
+  def matchingWithAddon(w: Where): DataFrame =
+    cached("addon" + whereKey(w))(matchingWithAddonC(compile(w)))
 
   private def matchingWithAddonC(cq: CompiledQuery): DataFrame = {
     if (SearchKernel.isVoid(cq))
@@ -278,22 +303,9 @@ final class Searcher(spark: SparkSession, indexDir: String,
   private def altServes(cq: CompiledQuery): Boolean =
     meta.altOrder && !SearchKernel.needsFullScan(cq)
 
-  def topKAddon(queryStr: String, c: Long, op: String, k: Int): DataFrame =
-    cached("topKA" + Searcher.key(queryStr, c.toString, op, k.toString)) {
-      topKAddonC(compile(queryStr), c, op, k)
-    }
-
-  /** Multicolumn ordered scan: `WHERE f1 @@ q1 AND f2 @@ q2 ORDER BY
-    * addon <op> c LIMIT k` — the reference's multicolumn test shape
-    * (sql/orderby.sql:89-106: text predicate + `ORDER BY d <=> c` on one
-    * index). Field-prefixed keys ride through the same alt-order kernel, so
-    * early termination is preserved.
-    */
-  def topKAddonMulti(fieldQueries: Seq[(String, String)], c: Long, op: String,
-                     k: Int): DataFrame =
-    cached("topKAM" + Searcher.key(
-      fieldQueries.flatMap(p => Seq(p._1, p._2)) ++ Seq(c.toString, op, k.toString): _*)) {
-      topKAddonC(compileMulti(fieldQueries), c, op, k)
+  def topKAddon(w: Where, c: Long, op: String, k: Int): DataFrame =
+    cached("topKA" + Searcher.key(c.toString, op, k.toString) + whereKey(w)) {
+      topKAddonC(compile(w), c, op, k)
     }
 
   /** Float-typed ordered scan in VALUE units: `WHERE t @@ q ORDER BY
@@ -307,10 +319,10 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * paths (Spark orders double NaN greatest; the kernel's canonical-NaN
     * bit image is above +Inf's). Output (docId, value, distance).
     */
-  def topKAddonFloat(queryStr: String, c: Double, op: String, k: Int): DataFrame =
-    cached("topKAF" + Searcher.key(queryStr,
-        java.lang.Double.doubleToLongBits(c).toString, op, k.toString)) {
-      topKAddonFloatC(compile(queryStr), c, op, k)
+  def topKAddonFloat(w: Where, c: Double, op: String, k: Int): DataFrame =
+    cached("topKAF" + Searcher.key(
+        java.lang.Double.doubleToLongBits(c).toString, op, k.toString) + whereKey(w)) {
+      topKAddonFloatC(compile(w), c, op, k)
     }
 
   private def topKAddonFloatC(cq: CompiledQuery, c: Double, op: String,
@@ -362,13 +374,13 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * bit order = value order, so the bounds map straight onto the
     * long-keyed layout's bounded stream. Output (docId, value).
     */
-  def rangeAddonFloat(queryStr: String, lo: Double, hi: Double): DataFrame =
-    cached("rangeAF" + Searcher.key(queryStr,
+  def rangeAddonFloat(w: Where, lo: Double, hi: Double): DataFrame =
+    cached("rangeAF" + Searcher.key(
         java.lang.Double.doubleToLongBits(lo).toString,
-        java.lang.Double.doubleToLongBits(hi).toString)) {
+        java.lang.Double.doubleToLongBits(hi).toString) + whereKey(w)) {
       val decode = udf((bits: Long) =>
         graft.build.AddonUnits.floatFromOrderedBits(bits))
-      rangeAddonC(compile(queryStr),
+      rangeAddonC(compile(w),
           graft.build.AddonUnits.floatOrderedBits(lo),
           graft.build.AddonUnits.floatOrderedBits(hi))
         .select(col("docId"), decode(col("addon")).as("value"))
@@ -433,14 +445,16 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * only contract (one-sided misses are excluded, like [[topKAddon]]).
     * Output: (docId, d0, d1, ...) distances as doubles in key order.
     */
-  def topKMulti(queryStr: String, orderKeys: Seq[Searcher.OrderKey], k: Int): DataFrame =
+  def topKMulti(w: Where, orderKeys: Seq[Searcher.OrderKey], k: Int): DataFrame =
     cached("topKMul" + Searcher.key(
-      queryStr +: orderKeys.map(_.toString) :+ k.toString: _*)) {
-      topKMultiC(compile(queryStr), orderKeys, k)
+      k.toString +: orderKeys.map(_.toString): _*) + whereKey(w)) {
+      val (cq, scoreCq, scoreMap) = compileRanked(w)
+      topKMultiC(cq, orderKeys, k, scoreCq, scoreMap)
     }
 
   private def topKMultiC(cq: CompiledQuery, orderKeys: Seq[Searcher.OrderKey],
-                         k: Int): DataFrame = {
+                         k: Int, scoreCq: CompiledQuery,
+                         scoreMap: Array[Int]): DataFrame = {
     import Searcher.OrderKey
     require(orderKeys.nonEmpty, "at least one order key")
     val methods = orderKeys.collect { case OrderKey.Rank(m) => m }
@@ -454,7 +468,8 @@ final class Searcher(spark: SparkSession, indexDir: String,
     val needsHeap = (method & (CoverRank.NormUniq | CoverRank.NormLogUniq)) != 0
     val base =
       if (needsHeap || SearchKernel.needsFullScan(cq))
-        fullScan(cq, score = needRank, matchOnly = true, k = 0, method = method)
+        fullScan(cq, score = needRank, matchOnly = true, k = 0, method = method,
+          scoreCq = scoreCq, scoreMap = scoreMap)
       else {
         val keys = SearchKernel.keySpecs(cq)
         // k = 0: the kernel's own heap orders by (rank, docId) only, which
@@ -464,7 +479,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
           .groupByKey(_.shard)
           .flatMapGroups((shard: Int, it: Iterator[PostingRow]) =>
             SearchKernel.matchShard(cq, keys, it, score = needRank, k = 0,
-              method = method))
+              method = method, scoreCq = scoreCq, scoreMap = scoreMap))
           .toDF("docId", "distance", "addon")
       }
     val distCols = orderKeys.zipWithIndex.map {
@@ -496,16 +511,9 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * bounded ordered stream when available (cost tracks the in-range match
     * count), else filter over all matches.
     */
-  def rangeAddon(queryStr: String, lo: Long, hi: Long): DataFrame =
-    cached("rangeA" + Searcher.key(queryStr, lo.toString, hi.toString)) {
-      rangeAddonC(compile(queryStr), lo, hi)
-    }
-
-  /** Multicolumn variant of [[rangeAddon]]. */
-  def rangeAddonMulti(fieldQueries: Seq[(String, String)], lo: Long, hi: Long): DataFrame =
-    cached("rangeAM" + Searcher.key(
-      fieldQueries.flatMap(p => Seq(p._1, p._2)) ++ Seq(lo.toString, hi.toString): _*)) {
-      rangeAddonC(compileMulti(fieldQueries), lo, hi)
+  def rangeAddon(w: Where, lo: Long, hi: Long): DataFrame =
+    cached("rangeA" + Searcher.key(lo.toString, hi.toString) + whereKey(w)) {
+      rangeAddonC(compile(w), lo, hi)
     }
 
   private def rangeAddonC(cq: CompiledQuery, lo: Long, hi: Long): DataFrame = {
@@ -531,20 +539,10 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * join), which Spark partial-aggregates map-side. Only non-empty
     * buckets return (SQL GROUP BY semantics). Returns (bucket, cnt).
     */
-  def countByAddonBucket(queryStr: String, width: Long, lo: Long,
-                         hi: Long): DataFrame =
-    cached("facetA" + Searcher.key(queryStr, width.toString, lo.toString,
-      hi.toString)) {
-      countByAddonBucketC(compile(queryStr), width, lo, hi)
-    }
-
-  /** Multicolumn variant of [[countByAddonBucket]]. */
-  def countByAddonBucketMulti(fieldQueries: Seq[(String, String)],
-                              width: Long, lo: Long, hi: Long): DataFrame =
-    cached("facetAM" + Searcher.key(
-      fieldQueries.flatMap(p => Seq(p._1, p._2)) ++
-        Seq(width.toString, lo.toString, hi.toString): _*)) {
-      countByAddonBucketC(compileMulti(fieldQueries), width, lo, hi)
+  def countByAddonBucket(w: Where, width: Long, lo: Long, hi: Long): DataFrame =
+    cached("facetA" + Searcher.key(width.toString, lo.toString, hi.toString) +
+        whereKey(w)) {
+      countByAddonBucketC(compile(w), width, lo, hi)
     }
 
   private def countByAddonBucketC(cq: CompiledQuery, width: Long, lo: Long,
@@ -577,13 +575,13 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * bound), and a -0.0 bucket start normalizes to +0.0 on both paths.
     * Returns (bucket: double, cnt: long).
     */
-  def countByAddonBucketFloat(queryStr: String, width: Double, lo: Double,
+  def countByAddonBucketFloat(w: Where, width: Double, lo: Double,
                               hi: Double): DataFrame =
-    cached("facetAF" + Searcher.key(queryStr,
+    cached("facetAF" + Searcher.key(
         java.lang.Double.doubleToLongBits(width).toString,
         java.lang.Double.doubleToLongBits(lo).toString,
-        java.lang.Double.doubleToLongBits(hi).toString)) {
-      countByAddonBucketFloatC(compile(queryStr), width, lo, hi)
+        java.lang.Double.doubleToLongBits(hi).toString) + whereKey(w)) {
+      countByAddonBucketFloatC(compile(w), width, lo, hi)
     }
 
   private def countByAddonBucketFloatC(cq: CompiledQuery, width: Double,
@@ -635,61 +633,13 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * table (the "heap" — exactly where the reference's rum_ts_distance
     * reads txt->size from), so those queries route through the full scan.
     */
-  def topKCover(queryStr: String, k: Int, matchOnly: Boolean = true,
+  def topKCover(w: Where, k: Int, matchOnly: Boolean = true,
                 method: Int = 0): DataFrame =
-    cached("topKC" + Searcher.key(queryStr, k.toString, matchOnly.toString,
-      method.toString)) {
-      topKCoverC(compile(queryStr), k, matchOnly, method, null, null)
+    cached("topKC" + Searcher.key(k.toString, matchOnly.toString,
+      method.toString) + whereKey(w)) {
+      val (cq, scoreCq, scoreMap) = compileRanked(w)
+      topKCoverC(cq, k, matchOnly, method, scoreCq, scoreMap)
     }
-
-  /** Multicolumn ranked scan: match `rankQuery` on `rankField` AND every
-    * `filters` predicate on its field — one kernel pass over field-prefixed
-    * keys — but rank by the cover-density of `rankQuery` ALONE (the other
-    * fields are boolean predicates, not rank inputs), mirroring the
-    * reference's multicolumn ordered scans where `ORDER BY t <=> q` ranks
-    * one column while siblings filter (sql/orderby.sql:89-106;
-    * attnum-prefixed keys src/rumutil.c:266-288).
-    */
-  def topKCoverMulti(rankField: String, rankQuery: String,
-                     filters: Seq[(String, String)], k: Int,
-                     matchOnly: Boolean = true, method: Int = 0): DataFrame =
-    cached("topKCM" + Searcher.key(
-      Seq(rankField, rankQuery) ++ filters.flatMap(p => Seq(p._1, p._2)) ++
-        Seq(k.toString, matchOnly.toString, method.toString): _*)) {
-      topKCoverMultiU(rankField, rankQuery, filters, k, matchOnly, method)
-    }
-
-  /** (fullCq, scoreCq, scoreMap) for a multicolumn ranked scan: match the
-    * AND of every field's tsquery, rank by `rankQuery`'s cover-density
-    * alone; scoreCq key j reads positions from full-query key scoreMap(j)
-    * (dedup is per (term, prefix) on both sides, so the lookup is total).
-    */
-  private def compileCoverMulti(rankField: String, rankQuery: String,
-      filters: Seq[(String, String)]): (CompiledQuery, CompiledQuery, Array[Int]) = {
-    require(meta.fields.nonEmpty, "not a multi-column index")
-    val known = meta.fields.split(",").toSet
-    (rankField +: filters.map(_._1)).foreach(f =>
-      require(known.contains(f), s"unknown field '$f' (have ${meta.fields})"))
-    val rankTree = TsQuery.mapTerms(TsQueryParser.parse(rankQuery),
-      t => graft.build.IndexBuilder.fieldKey(rankField, t))
-    val filterTrees = filters.map { case (f, q) =>
-      TsQuery.mapTerms(TsQueryParser.parse(q),
-        t => graft.build.IndexBuilder.fieldKey(f, t))
-    }
-    val fullCq = compileTree((rankTree +: filterTrees).reduce(TsQuery.And(_, _)))
-    val scoreCq = compileTree(rankTree)
-    val scoreMap = scoreCq.keys.map(sk =>
-      fullCq.keys.indexWhere(fk => fk.term == sk.term && fk.prefix == sk.prefix))
-    require(scoreMap.forall(_ >= 0), "rank keys must appear in the full query")
-    (fullCq, scoreCq, scoreMap)
-  }
-
-  private def topKCoverMultiU(rankField: String, rankQuery: String,
-                     filters: Seq[(String, String)], k: Int,
-                     matchOnly: Boolean, method: Int): DataFrame = {
-    val (fullCq, scoreCq, scoreMap) = compileCoverMulti(rankField, rankQuery, filters)
-    topKCoverC(fullCq, k, matchOnly, method, scoreCq, scoreMap)
-  }
 
   private def topKCoverC(cq: CompiledQuery, k: Int, matchOnly: Boolean,
                          method: Int, scoreCq: CompiledQuery,
@@ -718,21 +668,17 @@ final class Searcher(spark: SparkSession, indexDir: String,
   /** Classic BM25 disjunctive top-k over bag-of-terms with WAND pruning
     * (the fast-scan analogue, src/rumget.c:1900-2017). Scores use true tf
     * and doc length carried in the posting payload (addon-column pattern).
+    * `field` scopes the terms to one field of a multi-column index: df/maxTf
+    * stats and doc lengths are then the field's own (posting payloads carry
+    * per-field token counts); `avgLen` stays the index-global average
+    * (documented engine behavior — the oracle mirrors it).
     */
-  /** Field-scoped BM25 over a multicolumn index: terms resolve to the
-    * field's prefixed key space, so df/maxTf stats and doc lengths are the
-    * field's own (posting payloads carry per-field token counts);
-    * `avgLen` stays the index-global average (documented engine behavior —
-    * the oracle mirrors it).
-    */
-  def topKBm25Fields(field: String, terms: Seq[String], k: Int): DataFrame = {
-    require(meta.fields.split(",").contains(field),
-      s"unknown field '$field' (have ${meta.fields})")
-    topKBm25(terms.map(t => graft.build.IndexBuilder.fieldKey(field, t)), k)
+  def topKBm25(terms: Seq[String], k: Int, field: Option[String] = None): DataFrame = {
+    field.foreach(requireField)
+    cached("bm25" + Searcher.bm25Key(terms, k, field)) {
+      topKBm25U(Searcher.qualify(terms, field), k)
+    }
   }
-
-  def topKBm25(terms: Seq[String], k: Int): DataFrame =
-    cached("bm25" + Searcher.key(terms :+ k.toString: _*))(topKBm25U(terms, k))
 
   /** Per-searcher term-stats memo: (df, maxTf) per key, absent terms cached
     * as (0, 0). A Searcher is pinned to one immutable snapshot, so stats
@@ -777,23 +723,19 @@ final class Searcher(spark: SparkSession, indexDir: String,
       .limit(k)
   }
 
-  /** Execute several prepared query DataFrames as ONE Spark job (the
-    * msearch/multi-query pattern): each result collapses to its row count
-    * and the branches union into a single action, so the per-job driver
-    * dispatch — serial at ANY cluster size — amortizes across the batch.
-    * This is how a high-QPS serving tier keeps query throughput scaling
-    * with executors when individual queries are millisecond-scale. Returns
-    * (branch index, row count) per input. The union plan is cached under
-    * `key` (caller owns key uniqueness per Searcher instance).
-    */
-  /** Zero-row frame with (qi, cols...) — the empty-msearch schema shared
-    * by every batch API's empty-input guard.
-    */
+  /** Zero-row frame with (qi, cols...) — the empty-msearch schema. */
   private def emptyBatch(cols: (String, String)*): DataFrame =
     spark.range(0).select(
       col("id").cast("int").as("qi") +: cols.map { case (n, t) =>
         col("id").cast(t).as(n) }: _*)
 
+  /** Execute several prepared query DataFrames as ONE Spark job: each
+    * result collapses to its row count and the branches union into a single
+    * action, so the per-job driver dispatch amortizes across the batch.
+    * Returns (branch index, row count) per input. The union plan is cached
+    * under `key` (caller owns key uniqueness per Searcher instance).
+    * [[msearch]] is the fused path (one scan for the whole batch).
+    */
   def batchRowCounts(key: String, dfs: => Seq[DataFrame]): Array[(Int, Long)] =
     cached("batch" + Searcher.key(key)) {
       val branches = dfs
@@ -804,42 +746,6 @@ final class Searcher(spark: SparkSession, indexDir: String,
           .select(lit(i).as("qi"), col("cnt"))
       }.reduce(_.union(_))
     }.collect().map(r => (r.getInt(0), r.getLong(1)))
-
-  /** Match counts for a batch of tsquery strings in one Spark job. */
-  def countBatch(queryStrs: Seq[String]): Map[String, Long] = {
-    val distinct = queryStrs.distinct
-    batchRowCounts("counts" + Searcher.key(distinct: _*),
-      distinct.map(matchingDocs))
-      .map { case (i, n) => distinct(i) -> n }.toMap
-  }
-
-  /** Batched ranked retrieval (msearch for BM25 top-k): every (terms, k)
-    * query's cached plan unions with a query-index tag into ONE job.
-    * Returns (qi, docId, score) — qi indexes into the input batch. The
-    * outer key joins per-query keys on a second separator so batch
-    * boundaries cannot alias.
-    */
-  def topKBm25Batch(queries: Seq[(Seq[String], Int)]): DataFrame =
-    cached("bm25B\u0001" + queries.map { case (ts, k) =>
-      (ts :+ k.toString).mkString("\u0001") }.mkString("\u0002")) {
-      if (queries.isEmpty) emptyBatch("docId" -> "long", "score" -> "double")
-      else queries.zipWithIndex.map { case ((ts, k), i) =>
-        topKBm25(ts, k).select(lit(i).as("qi"), col("docId"), col("score"))
-      }.reduce(_.union(_))
-    }
-
-  /** Batched cover-density ranked retrieval: the msearch twin of
-    * [[topKBm25Batch]] for the reference's flagship `<=>` ordering.
-    * Returns (qi, docId, distance).
-    */
-  def topKCoverBatch(queries: Seq[(String, Int)]): DataFrame =
-    cached("coverB\u0001" + queries.map { case (q, k) =>
-      q + "\u0001" + k }.mkString("\u0002")) {
-      if (queries.isEmpty) emptyBatch("docId" -> "long", "distance" -> "double")
-      else queries.zipWithIndex.map { case ((q, k), i) =>
-        topKCover(q, k).select(lit(i).as("qi"), col("docId"), col("distance"))
-      }.reduce(_.union(_))
-    }
 
   /** FUSED multi-search: evaluate a heterogeneous batch of queries in ONE
     * scan + ONE shuffle (the shared-scan msearch a serving tier runs when
@@ -900,14 +806,17 @@ final class Searcher(spark: SparkSession, indexDir: String,
         null, null, null, k, scoreCq, scoreMap, method)
     }
     def addOrder2(qi: Int, cq: CompiledQuery, c: Long, op: String, k: Int,
-                  method: Int): Unit = {
+                  method: Int, scoreCq: CompiledQuery, scoreMap: Array[Int]): Unit = {
       require(Set("both", "left", "right").contains(op), s"op: $op")
       require(k > 0, s"k: $k")
       val needsHeap = (method & (CoverRank.NormUniq | CoverRank.NormLogUniq)) != 0
       if (SearchKernel.isVoid(cq)) ()
-      else if (needsHeap || SearchKernel.needsFullScan(cq))
+      // a separate rank subtree (multi-field filters) is not a fused
+      // Order2 shape: the slot rides its solo plan
+      else if (needsHeap || SearchKernel.needsFullScan(cq) || scoreCq != null)
         fallback += topKMultiC(cq,
-            Seq(Searcher.OrderKey.Rank(method), Searcher.OrderKey.Addon(c, op)), k)
+            Seq(Searcher.OrderKey.Rank(method), Searcher.OrderKey.Addon(c, op)), k,
+            scoreCq, scoreMap)
           .select(lit(qi).as("qi"), col("docId"), col("d0").as("score"))
       else fused += Searcher.FusedSpec(qi, 4, cq, SearchKernel.keySpecs(cq),
         null, null, null, k, null, null, method, c, op)
@@ -995,45 +904,32 @@ final class Searcher(spark: SparkSession, indexDir: String,
     }
     specs.zipWithIndex.foreach { case (spec, qi) =>
       spec match {
-        case Match(q) => addMatch(qi, compile(q))
-        case Cover(q, k, method) => addCover(qi, compile(q), k, method, null, null)
-        case Order2(q, c, op, k, method) => addOrder2(qi, compile(q), c, op, k, method)
-        case Count(q) => addCount(qi, compile(q))
-        case CountFields(fq) => addCount(qi, compileMulti(fq))
-        case Bm25(terms, k) => addBm25(qi, terms.map(keyOf), k)
-        // field-scoped variants over a multi-column index: the same fused
-        // pass — field-prefixed keys are just keys to the kernel
-        case MatchFields(fq) => addMatch(qi, compileMulti(fq))
-        case CoverFields(rf, rq, filters, k) =>
-          val (fullCq, scoreCq, scoreMap) = compileCoverMulti(rf, rq, filters)
-          addCover(qi, fullCq, k, 0, scoreCq, scoreMap)
-        case Bm25Fields(field, terms, k) =>
-          require(meta.fields.split(",").contains(field),
-            s"unknown field '$field' (have ${meta.fields})")
-          addBm25(qi,
-            terms.map(t => keyOf(graft.build.IndexBuilder.fieldKey(field, t))), k)
+        case Match(w) => addMatch(qi, compile(w))
+        case Count(w) => addCount(qi, compile(w))
+        case Cover(w, k, method) =>
+          val (cq, scoreCq, scoreMap) = compileRanked(w)
+          addCover(qi, cq, k, method, scoreCq, scoreMap)
+        case Order2(w, c, op, k, method) =>
+          val (cq, scoreCq, scoreMap) = compileRanked(w)
+          addOrder2(qi, cq, c, op, k, method, scoreCq, scoreMap)
+        case Bm25(terms, k, field) =>
+          field.foreach(requireField)
+          addBm25(qi, Searcher.qualify(terms, field).map(keyOf), k)
         // ordered-scan slots ride the batch over the alt-order layout's
         // OWN shared scan (one per layout per batch), or their solo
         // fallback plans when the layout can't serve them
-        case Addon(q, c, op, k) => addAddon(qi, compile(q), c, op, k)
-        case AddonRange(q, lo, hi) => addRange(qi, compile(q), lo, hi)
-        case AddonFields(fq, c, op, k) => addAddon(qi, compileMulti(fq), c, op, k)
-        case AddonRangeFields(fq, lo, hi) => addRange(qi, compileMulti(fq), lo, hi)
+        case Addon(w, c, op, k) => addAddon(qi, compile(w), c, op, k)
+        case AddonRange(w, lo, hi) => addRange(qi, compile(w), lo, hi)
         // float value-units slots: the range desugars to encoded bounds
         // (bit order = value order); the top-k carries floatUnits through
         // to the kernel's distance closure
-        case AddonFloat(q, c, op, k) => addAddonFloat(qi, compile(q), c, op, k)
-        case AddonRangeFloat(q, lo, hi) => addRange(qi, compile(q),
+        case AddonFloat(w, c, op, k) => addAddonFloat(qi, compile(w), c, op, k)
+        case AddonRangeFloat(w, lo, hi) => addRange(qi, compile(w),
           graft.build.AddonUnits.floatOrderedBits(lo),
           graft.build.AddonUnits.floatOrderedBits(hi))
-        case Facet(q, w, lo, hi) => addFacet(qi, compile(q), w, lo, hi)
-        case FacetFields(fq, w, lo, hi) =>
-          addFacet(qi, compileMulti(fq), w, lo, hi)
-        case FacetFloat(q, w, lo, hi) => addFacetFloat(qi, compile(q), w, lo, hi)
-        // the placeholder key is an ordinary key to the kernel: these
-        // slots ride the shared scan like any single-term query
-        case MatchEmpty(f) => addMatch(qi, emptyCompiled(f))
-        case CountEmpty(f) => addCount(qi, emptyCompiled(f))
+        case Facet(w, width, lo, hi) => addFacet(qi, compile(w), width, lo, hi)
+        case FacetFloat(w, width, lo, hi) =>
+          addFacetFloat(qi, compile(w), width, lo, hi)
       }
     }
 
@@ -1235,51 +1131,6 @@ final class Searcher(spark: SparkSession, indexDir: String,
     msearchPlan(queryStrs.map(Searcher.MsearchSpec.Count(_)))
       .select(col("qi"), col("docId").as("cnt"))
 
-  /** docIds whose indexed value tokenizes to NOTHING (empty or NULL
-    * column) — served from the reserved placeholder key the build indexes
-    * for token-less docs ([[graft.build.IndexBuilder.EmptyToken]]; the
-    * reference's placeholder-key categories src/rum.h:205-211 and
-    * INCLUDE_EMPTY scan mode src/rumscan.c:144-151), NOT a corpus scan:
-    * the plan is a postings scan with one pushed-down key, like any other
-    * single-term match. On a multi-column index pass the field whose
-    * emptiness is being asked about.
-    */
-  private def emptyKeyRaw(field: Option[String]): String = field match {
-    case Some(f) =>
-      require(meta.fields.split(",").contains(f),
-        s"unknown field '$f' (have ${meta.fields})")
-      graft.build.IndexBuilder.fieldKey(f, graft.build.IndexBuilder.EmptyToken)
-    case None =>
-      require(meta.fields.isEmpty,
-        s"multi-column index (fields=${meta.fields}): pass the field")
-      graft.build.IndexBuilder.EmptyToken
-  }
-
-  /** The placeholder key as a compiled single-leaf query: to the kernel
-    * it is an ordinary pushed-down key (its rows carry an empty position
-    * payload, which decodes to a present-but-empty position list), so
-    * Match/Count slots over it ride fused batches like any other query —
-    * INCLUDE_EMPTY inside the serving batch (src/rumscan.c:144-151).
-    */
-  private def emptyCompiled(field: Option[String]): CompiledQuery =
-    compileTree(TsQuery.Lexeme(emptyKeyRaw(field)))
-
-  def matchingEmpty(field: Option[String] = None): DataFrame = {
-    val raw = emptyKeyRaw(field)
-    cached("matchEmpty" + Searcher.key(raw)) {
-      postings.where(col("term") === keyOf(raw))
-        .flatMap { row =>
-          val cur = new PostingCursor(Iterator(row.blocks))
-          val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-          while (!cur.done) { out += cur.docId; cur.next() }
-          out.iterator
-        }.toDF("docId")
-    }
-  }
-
-  def countEmpty(field: Option[String] = None): Long =
-    runCount("countEmpty" + Searcher.key(field.getOrElse("")), matchingEmpty(field))
-
   /** Decoded postings of one term: (doc_id, tf) — the bitmap-scan shape
     * plus payload-derived tf; used for verification and as a building
     * block for joins back to the corpus.
@@ -1329,18 +1180,44 @@ final class Searcher(spark: SparkSession, indexDir: String,
 }
 
 object Searcher {
+  /** The WHERE part of a query: which index keys it reads. Every query
+    * family takes one; the ranking, ordering and aggregation around it are
+    * the family's own. A plain String converts to [[Where.Query]].
+    */
+  sealed trait Where
+  object Where {
+    /** tsquery over a single-column index */
+    final case class Query(query: String) extends Where
+    /** one tsquery per field of a multi-column index, ANDed in one kernel
+      * pass over field-prefixed keys (src/rumutil.c:266-288). Cover ranking
+      * scores the FIRST pair's query alone; the other pairs filter
+      * (sql/orderby.sql:89-106).
+      */
+    final case class Fields(fieldQueries: Seq[(String, String)]) extends Where
+    /** docs whose value tokenizes to nothing (empty or NULL), served from
+      * the reserved placeholder key ([[graft.build.IndexBuilder.EmptyToken]],
+      * src/rum.h:205-211); pass the field on a multi-column index
+      */
+    final case class Empty(field: Option[String] = None) extends Where
+
+    implicit def fromQuery(query: String): Where = Query(query)
+  }
+
   /** One query of a fused [[Searcher.msearch]] batch. */
   sealed trait MsearchSpec
   object MsearchSpec {
-    /** unordered boolean match: every docId satisfying the tsquery */
-    final case class Match(query: String) extends MsearchSpec
-    /** BM25 disjunctive top-k over a bag of terms (higher score better) */
-    final case class Bm25(terms: Seq[String], k: Int) extends MsearchSpec
+    /** unordered boolean match: every docId satisfying `where` */
+    final case class Match(where: Where) extends MsearchSpec
+    /** BM25 disjunctive top-k over a bag of terms (higher score better);
+      * `field` scopes the terms to one field of a multi-column index
+      */
+    final case class Bm25(terms: Seq[String], k: Int, field: Option[String] = None)
+      extends MsearchSpec
     /** cover-density ranked top-k (score = distance, lower better);
       * `method` = CoverRank normalization flags (UNIQ norms route the slot
       * through its solo full-scan fallback — they read the docs table)
       */
-    final case class Cover(query: String, k: Int, method: Int = 0) extends MsearchSpec
+    final case class Cover(where: Where, k: Int, method: Int = 0) extends MsearchSpec
     /** composite-ordered top-k riding the fused batch:
       * `WHERE q ORDER BY t <=> q, addon <op> c, docId LIMIT k`
       * lexicographic (the [[Searcher.topKMulti]] Rank-then-Addon shape;
@@ -1351,7 +1228,7 @@ object Searcher {
       * (qi, docId, score)). UNIQ norms / full-scan-only queries ride as
       * their solo fallback plans.
       */
-    final case class Order2(query: String, c: Long, op: String, k: Int,
+    final case class Order2(where: Where, c: Long, op: String, k: Int,
         method: Int = 0) extends MsearchSpec
     /** match COUNT riding the fused batch: ships only the per-shard
       * PARTIAL count (the match set never leaves its shard — shuffle
@@ -1362,34 +1239,17 @@ object Searcher {
       * Count slots with Match/Bm25/Cover/Order2 slots shares the ONE
       * postings scan across all of them.
       */
-    final case class Count(query: String) extends MsearchSpec
-    /** multicolumn [[Count]]: one tsquery per field, ANDed */
-    final case class CountFields(fieldQueries: Seq[(String, String)])
-      extends MsearchSpec
-    /** multicolumn match: one tsquery per field, ANDed (compileMulti) */
-    final case class MatchFields(fieldQueries: Seq[(String, String)]) extends MsearchSpec
-    /** multicolumn ranked top-k: rank one field's query, siblings filter */
-    final case class CoverFields(rankField: String, rankQuery: String,
-        filters: Seq[(String, String)], k: Int) extends MsearchSpec
-    /** field-scoped BM25 over a multicolumn index */
-    final case class Bm25Fields(field: String, terms: Seq[String], k: Int)
-      extends MsearchSpec
+    final case class Count(where: Where) extends MsearchSpec
     /** addon ordered top-k: `WHERE q ORDER BY addon <op> c LIMIT k`
       * (score = exact saturating distance as double, lower better); served
       * from the alt-order layout when it can, else the slot's solo
       * fallback plan rides the batch
       */
-    final case class Addon(query: String, c: Long, op: String, k: Int)
+    final case class Addon(where: Where, c: Long, op: String, k: Int)
       extends MsearchSpec
     /** addon range filter: `WHERE q AND lo <= addon <= hi` (score = 0.0) */
-    final case class AddonRange(query: String, lo: Long, hi: Long)
+    final case class AddonRange(where: Where, lo: Long, hi: Long)
       extends MsearchSpec
-    /** multicolumn [[Addon]]: one tsquery per field, ANDed */
-    final case class AddonFields(fieldQueries: Seq[(String, String)], c: Long,
-        op: String, k: Int) extends MsearchSpec
-    /** multicolumn [[AddonRange]] */
-    final case class AddonRangeFields(fieldQueries: Seq[(String, String)],
-        lo: Long, hi: Long) extends MsearchSpec
     /** [[Addon]] in float VALUE units over a
       * [[graft.build.AddonUnits.floatOrderedBits]]-encoded attach: score =
       * `|value - c|` as an exact double — the fused twin of
@@ -1397,14 +1257,14 @@ object Searcher {
       * ranking the double distance's own bit image (early termination
       * preserved); NaN addons sort last.
       */
-    final case class AddonFloat(query: String, c: Double, op: String, k: Int)
+    final case class AddonFloat(where: Where, c: Double, op: String, k: Int)
       extends MsearchSpec
     /** [[AddonRange]] in float VALUE units: a pure bound desugar — bit
       * order = value order for [[graft.build.AddonUnits.floatOrderedBits]]
       * keys, so the slot IS an AddonRange over the encoded bounds (NaN
       * never matches: its bit image sits above +Inf's).
       */
-    final case class AddonRangeFloat(query: String, lo: Double, hi: Double)
+    final case class AddonRangeFloat(where: Where, lo: Double, hi: Double)
       extends MsearchSpec
     /** facet histogram riding the fused batch (the
       * [[Searcher.countByAddonBucket]] shape): per-shard bucket PARTIALS
@@ -1414,11 +1274,8 @@ object Searcher {
       * Alt-unservable queries aggregate their solo fallback plan into the
       * batch union.
       */
-    final case class Facet(query: String, width: Long, lo: Long, hi: Long)
+    final case class Facet(where: Where, width: Long, lo: Long, hi: Long)
       extends MsearchSpec
-    /** multicolumn [[Facet]]: one tsquery per field, ANDed */
-    final case class FacetFields(fieldQueries: Seq[(String, String)],
-        width: Long, lo: Long, hi: Long) extends MsearchSpec
     /** [[Facet]] in float VALUE units over a
       * [[graft.build.AddonUnits.floatOrderedBits]]-encoded attach (the
       * fused twin of [[Searcher.countByAddonBucketFloat]]): result rows
@@ -1427,16 +1284,8 @@ object Searcher {
       * batch's shared alt scan; alt-unservable queries aggregate their
       * solo fallback plan with the same bit-image bucket column.
       */
-    final case class FacetFloat(query: String, width: Double, lo: Double,
+    final case class FacetFloat(where: Where, width: Double, lo: Double,
         hi: Double) extends MsearchSpec
-    /** docIds whose indexed value is empty/NULL, riding the fused batch —
-      * INCLUDE_EMPTY inside the serving batch (the reserved placeholder
-      * key is an ordinary pushed-down key to the kernel,
-      * src/rumscan.c:144-151). Pass the field on a multicolumn index.
-      */
-    final case class MatchEmpty(field: Option[String] = None) extends MsearchSpec
-    /** count of empty/NULL values as a per-shard-partial [[Count]] slot */
-    final case class CountEmpty(field: Option[String] = None) extends MsearchSpec
   }
 
   private[search] def requireFacet(width: Long, lo: Long, hi: Long): Unit = {
@@ -1508,52 +1357,50 @@ object Searcher {
   val MaxCachedPlans = 4096
 
   /** Collision-safe cache key for one msearch spec: a variant tag + the
-    * structured constructor fields joined on \u0001, terminated by \u0002.
+    * spec's fixed fields, then its [[whereKey]], terminated by \u0002.
     * (Keying on case-class toString would render Bm25(Seq("a, b"), k) and
     * Bm25(Seq("a", "b"), k) identically -- two different batches could then
-    * share a cache slot and return the wrong cached plan.)
+    * share a cache slot and return the wrong cached plan.) Doubles are
+    * keyed by raw bits: distinguishes -0.0/0.0 and every NaN payload the
+    * caller could pass (toString would collapse them).
     */
   private[search] def specKey(sp: MsearchSpec): String = {
     import MsearchSpec._
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d).toString
     (sp match {
-      case Match(q) => key("M", q)
-      case Bm25(ts, k) => key("B" +: k.toString +: ts: _*)
-      case Cover(q, k, m) => key("C", q, k.toString, m.toString)
-      case Order2(q, c, op, k, m) =>
-        key("O2", q, c.toString, op, k.toString, m.toString)
-      case Count(q) => key("K", q)
-      case CountFields(fq) => key("KF" +: fq.flatMap(p => Seq(p._1, p._2)): _*)
-      case MatchFields(fq) => key("MF" +: fq.flatMap(p => Seq(p._1, p._2)): _*)
-      case CoverFields(rf, rq, fl, k) =>
-        key(Seq("CF", rf, rq, k.toString) ++ fl.flatMap(p => Seq(p._1, p._2)): _*)
-      case Bm25Fields(f, ts, k) => key(Seq("BF", f, k.toString) ++ ts: _*)
-      case Addon(q, c, op, k) => key("A", q, c.toString, op, k.toString)
-      case AddonRange(q, lo, hi) => key("R", q, lo.toString, hi.toString)
-      case AddonFields(fq, c, op, k) =>
-        key(Seq("AF", c.toString, op, k.toString) ++ fq.flatMap(p => Seq(p._1, p._2)): _*)
-      case AddonRangeFields(fq, lo, hi) =>
-        key(Seq("RF", lo.toString, hi.toString) ++ fq.flatMap(p => Seq(p._1, p._2)): _*)
-      // doubles keyed by raw bits: distinguishes -0.0/0.0 and every NaN
-      // payload the caller could pass (toString would collapse them)
-      case AddonFloat(q, c, op, k) =>
-        key("AD", q, java.lang.Double.doubleToRawLongBits(c).toString, op,
-          k.toString)
-      case AddonRangeFloat(q, lo, hi) =>
-        key("RD", q, java.lang.Double.doubleToRawLongBits(lo).toString,
-          java.lang.Double.doubleToRawLongBits(hi).toString)
-      case Facet(q, w, lo, hi) =>
-        key("FA", q, w.toString, lo.toString, hi.toString)
-      case FacetFields(fq, w, lo, hi) =>
-        key(Seq("FAF", w.toString, lo.toString, hi.toString) ++
-          fq.flatMap(p => Seq(p._1, p._2)): _*)
-      case FacetFloat(q, w, lo, hi) =>
-        key("FAD", q, java.lang.Double.doubleToRawLongBits(w).toString,
-          java.lang.Double.doubleToRawLongBits(lo).toString,
-          java.lang.Double.doubleToRawLongBits(hi).toString)
-      case MatchEmpty(f) => key("ME", f.getOrElse(""))
-      case CountEmpty(f) => key("KE", f.getOrElse(""))
+      case Match(w) => key("M") + whereKey(w)
+      case Count(w) => key("K") + whereKey(w)
+      case Bm25(ts, k, f) => key("B") + bm25Key(ts, k, f)
+      case Cover(w, k, m) => key("C", k.toString, m.toString) + whereKey(w)
+      case Order2(w, c, op, k, m) =>
+        key("O2", c.toString, op, k.toString, m.toString) + whereKey(w)
+      case Addon(w, c, op, k) => key("A", c.toString, op, k.toString) + whereKey(w)
+      case AddonRange(w, lo, hi) => key("R", lo.toString, hi.toString) + whereKey(w)
+      case AddonFloat(w, c, op, k) => key("AD", bits(c), op, k.toString) + whereKey(w)
+      case AddonRangeFloat(w, lo, hi) => key("RD", bits(lo), bits(hi)) + whereKey(w)
+      case Facet(w, wd, lo, hi) =>
+        key("FA", wd.toString, lo.toString, hi.toString) + whereKey(w)
+      case FacetFloat(w, wd, lo, hi) =>
+        key("FAD", bits(wd), bits(lo), bits(hi)) + whereKey(w)
     }) + "\u0002"
   }
+
+  /** Cache key of a [[Where]]: a form tag, then its fields. Appended after
+    * a caller's fixed-arity parts, so the part count keeps keys distinct.
+    */
+  private[search] def whereKey(w: Where): String = w match {
+    case Where.Query(q) => key("Q", q)
+    case Where.Fields(fq) => key("F" +: fq.flatMap(p => Seq(p._1, p._2)): _*)
+    case Where.Empty(f) => key("E" +: f.toSeq: _*)
+  }
+
+  /** BM25 cache key: k, whether a field is given, the field, the terms. */
+  private def bm25Key(terms: Seq[String], k: Int, field: Option[String]): String =
+    key(Seq(k.toString, field.size.toString) ++ field ++ terms: _*)
+
+  /** Terms in `field`'s prefixed key space (unchanged without a field). */
+  private def qualify(terms: Seq[String], field: Option[String]): Seq[String] =
+    field.fold(terms)(f => terms.map(IndexBuilder.fieldKey(f, _)))
 
   /** Collision-free cache key: args joined on \u0001 (cannot appear in
     * tsquery strings, terms, or rendered numbers).

@@ -56,6 +56,44 @@ class AppendSpec extends AnyFunSuite {
     val s = new Searcher(spark, dir)
     val a = s.matchingWithAddon("common").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(a(75L) == 750L)
+    // the docs table (len, uniq, addon per doc) is derived exactly as a
+    // build derives it
+    assert(docsTable(dir) == docsTable(full))
+  }
+
+  private def docsTable(dir: String): Set[graft.build.DocRow] =
+    IndexBuilder.readDataset(spark, dir, SegmentCatalog.load(dir).get, "docs")
+      .as[graft.build.DocRow].collect().toSet
+
+  test("append and appendFields write the docs table a fresh build writes") {
+    // every tokenizer; empty, NULL and repeated-term values included
+    val texts = Seq("Parse parseHTTPResponse getFoo2Bar parse", "", null,
+      "alpha alpha beta", "...!!!", "one two three four five six seven eight nine ten")
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t, i.toLong * 10) }
+    val (base, extra) = docs.splitAt(2)
+    for (tok <- Seq("simple", "code", "simple_title8")) {
+      val p = params.copy(tokenizer = tok)
+      def fresh(rows: Seq[(Long, String, Long)]): String = {
+        val d = java.nio.file.Files.createTempDirectory("apdocs").toString
+        IndexBuilder.build(spark, rows.toDF("id", "t", "w"), "id", "t", d, p)
+        d
+      }
+      val dir = fresh(base)
+      IndexBuilder.append(spark, extra.toDF("id", "t", "w"), "id", "t", dir)
+      assert(docsTable(dir) == docsTable(fresh(docs)), tok)
+    }
+    // multi-column: per-field rows summed, a NULL field counting zero
+    val fdocs = docs.map { case (i, t, w) => (i, t, if (i % 2 == 0) "en gb" else null, w) }
+    val fields = Seq("body" -> "t", "lang" -> "l")
+    def freshFields(rows: Seq[(Long, String, String, Long)]): String = {
+      val d = java.nio.file.Files.createTempDirectory("apdocsf").toString
+      IndexBuilder.buildFields(spark, rows.toDF("id", "t", "l", "w"), "id", fields, d, params)
+      d
+    }
+    val (fbase, fextra) = fdocs.splitAt(2)
+    val fdir = freshFields(fbase)
+    IndexBuilder.appendFields(spark, fextra.toDF("id", "t", "l", "w"), "id", fields, fdir)
+    assert(docsTable(fdir) == docsTable(freshFields(fdocs)))
   }
 
   test("append then compact: same results, single-run layout") {

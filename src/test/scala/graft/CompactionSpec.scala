@@ -112,4 +112,32 @@ class CompactionSpec extends AnyFunSuite {
       assert(diskFiles(dir, kind) == meta.dataFiles(kind).toSet, kind)
     assert(IndexBuilder.validate(spark, dir).isEmpty)
   }
+
+  test("a failed concurrent write cancels its sibling writes before rethrowing") {
+    val sc = spark.sparkContext
+    val sibling = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val t0 = System.nanoTime()
+    val err = intercept[IllegalStateException] {
+      IndexBuilder.runConcurrently(spark, Seq(
+        () => {
+          // fail only once the sibling's Spark job is running
+          val deadline = System.nanoTime() + 60000000000L
+          while (sc.statusTracker.getActiveJobIds().isEmpty && System.nanoTime() < deadline)
+            Thread.sleep(20)
+          throw new IllegalStateException("write failed")
+        },
+        () => try {
+          // a write that blocks until its tasks are killed (or a minute passes)
+          sc.parallelize(0 until 2, 2).foreach { _ =>
+            val tc = org.apache.spark.TaskContext.get()
+            val deadline = System.nanoTime() + 60000000000L
+            while (!tc.isInterrupted() && System.nanoTime() < deadline) Thread.sleep(20)
+          }
+        } catch { case t: Throwable => sibling.set(t); throw t }))
+    }
+    assert(err.getMessage == "write failed")
+    assert(sibling.get != null, "sibling write ran to completion")
+    assert(sibling.get.getMessage.toLowerCase.contains("cancel"), sibling.get.getMessage)
+    assert((System.nanoTime() - t0) / 1e9 < 30, "sibling was not cancelled promptly")
+  }
 }

@@ -43,4 +43,15 @@ class LimitsSpec extends AnyFunSuite {
     val tfs = s.termPostings(longTerm).collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(tfs.size == 1024 && tfs(0L) == 2 && tfs(1L) == 1)
   }
+
+  test("blockSize must be positive: rejected at the build call") {
+    val docs = Seq((1L, "alpha")).toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("limbs").toString
+    for (bs <- Seq(0, -1)) {
+      val e = intercept[IllegalArgumentException](
+        IndexBuilder.build(spark, docs, "doc_id", "text", dir,
+          IndexBuilder.Params(nShards = 2, blockSize = bs)))
+      assert(e.getMessage.contains(s"blockSize must be positive: $bs"), e.getMessage)
+    }
+  }
 }

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.build.IndexBuilder
 import graft.search.Searcher
+import graft.search.Searcher.Where.Fields
 
 /** Fused multi-search (one scan + one shuffle for a heterogeneous query
   * batch): every slot must return exactly its solo query's rows/scores,
@@ -136,9 +137,9 @@ class MsearchFusedSpec extends AnyFunSuite {
       IndexBuilder.Params(nShards = 2))
     val s = new Searcher(spark, d)
     val fq = Seq("body" -> "even", "lang" -> "lang1")
-    val got = s.msearch(Seq(CountFields(fq), MatchFields(fq))).collect()
+    val got = s.msearch(Seq(Count(Fields(fq)), Match(Fields(fq)))).collect()
       .map(r => (r.getInt(0), r.getLong(1))).groupBy(_._1)
-    val soloIds = s.matchingDocsMulti(fq).collect().map(_.getLong(0)).toSet
+    val soloIds = s.matchingDocs(Fields(fq)).collect().map(_.getLong(0)).toSet
     assert(got(0).map(_._2).toList == List(soloIds.size.toLong))
     assert(got(1).map(_._2).toSet == soloIds && soloIds.nonEmpty)
   }
@@ -163,7 +164,7 @@ class MsearchFusedSpec extends AnyFunSuite {
         val solo = searcher.matchingDocs(q).collect().map(_.getLong(0)).toSet
         assert(got.get(qi).map(_.map(_._2).toSet).getOrElse(Set.empty) == solo,
           s"slot $qi Match($q)")
-      case (Bm25(ts, k), qi) =>
+      case (Bm25(ts, k, _), qi) =>
         val solo = searcher.topKBm25(ts, k).collect()
           .map(r => (r.getLong(0), r.getDouble(1))).toSet
         assert(got(qi).map(t => (t._2, t._3)).toSet == solo, s"slot $qi Bm25($ts,$k)")
@@ -410,13 +411,13 @@ class MsearchFusedSpec extends AnyFunSuite {
     val s = new Searcher(spark, d)
     val fq = Seq("body" -> "even", "lang" -> "lang1")
     val got = s.msearch(Seq(
-      AddonFields(fq, -100L, "both", 5),
-      AddonRangeFields(fq, -300L, 0L))).collect()
+      Addon(Fields(fq), -100L, "both", 5),
+      AddonRange(Fields(fq), -300L, 0L))).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).groupBy(_._1)
-    val solo = s.topKAddonMulti(fq, -100L, "both", 5).collect()
+    val solo = s.topKAddon(Fields(fq), -100L, "both", 5).collect()
       .map(r => (r.getLong(0), r.getDouble(2))).toSet
     assert(got(0).map(t => (t._2, t._3)).toSet == solo && solo.nonEmpty)
-    val soloR = s.rangeAddonMulti(fq, -300L, 0L).collect().map(_.getLong(0)).toSet
+    val soloR = s.rangeAddon(Fields(fq), -300L, 0L).collect().map(_.getLong(0)).toSet
     assert(got(1).map(_._2).toSet == soloR && soloR.nonEmpty)
   }
 

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.build.IndexBuilder
 import graft.search.Searcher
+import graft.search.Searcher.Where.Empty
 
 /** Null/dirty-input semantics at build time — 100 TB corpora have nulls:
   * null or empty TEXT indexes as an empty document (len 0, visible to
@@ -45,10 +46,10 @@ class NullHandlingSpec extends AnyFunSuite {
     IndexBuilder.build(spark, docs.toDF("id", "t", "w"), "id", "t", dir,
       IndexBuilder.Params(nShards = 2, attach = Some("w")))
     val s = new Searcher(spark, dir)
-    assert(s.matchingEmpty().collect().map(_.getLong(0)).toSet == Set(2L, 3L, 4L))
-    assert(s.countEmpty() == 3L)
+    assert(s.matchingDocs(Empty()).collect().map(_.getLong(0)).toSet == Set(2L, 3L, 4L))
+    assert(s.count(Empty()) == 3L)
     // the plan reads the postings table only — no docs-table corpus scan
-    val plan = s.matchingEmpty().queryExecution.executedPlan.toString
+    val plan = s.matchingDocs(Empty()).queryExecution.executedPlan.toString
     assert(plan.contains("postings") && !plan.contains("/docs"))
     // placeholder stays invisible to term, prefix and negation queries
     assert(s.matchingDocs("beta").collect().map(_.getLong(0)).toSet == Set(1L, 5L))
@@ -67,7 +68,7 @@ class NullHandlingSpec extends AnyFunSuite {
     IndexBuilder.build(spark, docs.toDF("id", "t", "w"), "id", "t", dir,
       IndexBuilder.Params(nShards = 2, attach = Some("w")))
     val s = new Searcher(spark, dir)
-    val got = s.msearch(Seq(CountEmpty(None), Match("beta"), MatchEmpty(None)))
+    val got = s.msearch(Seq(Count(Empty(None)), Match("beta"), Match(Empty(None))))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1)
     assert(got(0).map(t => (t._2, t._3)).toSeq == Seq((2L, 2.0))) // count via spine
@@ -80,11 +81,11 @@ class NullHandlingSpec extends AnyFunSuite {
         .toDF("id", "a", "b"),
       "id", Seq("fa" -> "a", "fb" -> "b"), dirM, IndexBuilder.Params(nShards = 2))
     val sM = new Searcher(spark, dirM)
-    val gotM = sM.msearch(Seq(MatchEmpty(Some("fa")), CountEmpty(Some("fb"))))
+    val gotM = sM.msearch(Seq(Match(Empty(Some("fa"))), Count(Empty(Some("fb")))))
       .collect().map(r => (r.getInt(0), r.getLong(1))).groupBy(_._1)
     assert(gotM(0).map(_._2).toSet == Set(2L))
     assert(gotM(1).map(_._2).toSeq == Seq(1L))
-    intercept[IllegalArgumentException](sM.msearch(Seq(MatchEmpty(None))))
+    intercept[IllegalArgumentException](sM.msearch(Seq(Match(Empty(None)))))
   }
 
   test("placeholder survives append, delete and compact") {
@@ -95,13 +96,13 @@ class NullHandlingSpec extends AnyFunSuite {
     IndexBuilder.append(spark,
       Seq((3L, null.asInstanceOf[String], 3L), (4L, "beta", 4L)).toDF("id", "t", "w"),
       "id", "t", dir, autoCompactRuns = 0)
-    assert(new Searcher(spark, dir).matchingEmpty().collect()
+    assert(new Searcher(spark, dir).matchingDocs(Empty()).collect()
       .map(_.getLong(0)).toSet == Set(2L, 3L))
     IndexBuilder.delete(spark, dir, Seq(2L).toDF("id"))
-    assert(new Searcher(spark, dir).matchingEmpty().collect()
+    assert(new Searcher(spark, dir).matchingDocs(Empty()).collect()
       .map(_.getLong(0)).toSet == Set(3L))
     IndexBuilder.compact(spark, dir)
-    assert(new Searcher(spark, dir).countEmpty() == 1L)
+    assert(new Searcher(spark, dir).count(Empty()) == 1L)
   }
 
   test("multi-column: per-field empty placeholders") {
@@ -113,10 +114,10 @@ class NullHandlingSpec extends AnyFunSuite {
     IndexBuilder.buildFields(spark, docs.toDF("id", "a", "b"), "id",
       Seq("fa" -> "a", "fb" -> "b"), dir, IndexBuilder.Params(nShards = 2))
     val s = new Searcher(spark, dir)
-    assert(s.matchingEmpty(Some("fa")).collect().map(_.getLong(0)).toSet == Set(2L))
-    assert(s.matchingEmpty(Some("fb")).collect().map(_.getLong(0)).toSet == Set(3L))
-    intercept[IllegalArgumentException](s.matchingEmpty(Some("nope")))
-    intercept[IllegalArgumentException](s.matchingEmpty(None))
+    assert(s.matchingDocs(Empty(Some("fa"))).collect().map(_.getLong(0)).toSet == Set(2L))
+    assert(s.matchingDocs(Empty(Some("fb"))).collect().map(_.getLong(0)).toSet == Set(3L))
+    intercept[IllegalArgumentException](s.matchingDocs(Empty(Some("nope"))))
+    intercept[IllegalArgumentException](s.matchingDocs(Empty(None)))
   }
 
   test("hash-keyed index: placeholder key is hashed like any other") {
@@ -125,7 +126,7 @@ class NullHandlingSpec extends AnyFunSuite {
     IndexBuilder.build(spark, docs.toDF("id", "t"), "id", "t", dir,
       IndexBuilder.Params(nShards = 2, keyKind = "hash"))
     val s = new Searcher(spark, dir)
-    assert(s.matchingEmpty().collect().map(_.getLong(0)).toSet == Set(2L))
+    assert(s.matchingDocs(Empty()).collect().map(_.getLong(0)).toSet == Set(2L))
   }
 
   test("null addon fails fast with the column name") {

@@ -52,20 +52,24 @@ class PlanCacheSpec extends AnyFunSuite {
     assert(top1.sameElements(top2))
   }
 
-  test("countBatch: one msearch job, per-query-correct counts") {
+  test("msearchCounts: one fused job, per-query-correct counts") {
     val s = new Searcher(spark, idxDir)
     val qs = Seq("merge & partition", "sort", "alpha & merge", "nosuchterm")
-    val batch = s.countBatch(qs)
-    assert(batch.keySet === qs.toSet)
-    qs.foreach(q => assert(batch(q) === s.count(q), q))
-    assert(batch("nosuchterm") === 0L)
-    assert(s.countBatch(qs) === batch) // cached union plan, same answers
+    def counts: Map[Int, Long] =
+      s.msearchCounts(qs).collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val batch = counts
+    assert(batch.keySet === qs.indices.toSet)
+    qs.zipWithIndex.foreach { case (q, i) => assert(batch(i) === s.count(q), q) }
+    assert(batch(3) === 0L)
+    assert(s.msearchCounts(qs) eq s.msearchCounts(qs)) // cached plan
+    assert(counts === batch)                          // same answers on re-run
   }
 
-  test("topKBm25Batch: tagged union matches per-query results") {
+  test("msearch Bm25 slots match per-query results") {
+    import Searcher.MsearchSpec.Bm25
     val s = new Searcher(spark, idxDir)
     val batch = Seq((Seq("merge", "sort"), 5), (Seq("alpha"), 3))
-    val got = s.topKBm25Batch(batch).collect()
+    val got = s.msearch(batch.map { case (ts, k) => Bm25(ts, k) }).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).sortBy(_._1)).toMap
     batch.zipWithIndex.foreach { case ((ts, k), i) =>
@@ -75,10 +79,11 @@ class PlanCacheSpec extends AnyFunSuite {
     }
   }
 
-  test("topKCoverBatch: tagged union matches per-query results") {
+  test("msearch Cover slots match per-query results") {
+    import Searcher.MsearchSpec.Cover
     val s = new Searcher(spark, idxDir)
     val batch = Seq(("alpha & merge", 4), ("sort | merge", 3))
-    val got = s.topKCoverBatch(batch).collect()
+    val got = s.msearch(batch.map { case (q, k) => Cover(q, k) }).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).sortBy(_._1)).toMap
     batch.zipWithIndex.foreach { case ((q, k), i) =>
@@ -86,14 +91,14 @@ class PlanCacheSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1)
       assert(got(i).toSeq === solo.toSeq, s"query $i")
     }
-    assert(s.topKCoverBatch(Seq.empty).collect().isEmpty)
   }
 
   test("empty msearch batches return empty results, not a crash") {
     val s = new Searcher(spark, idxDir)
-    assert(s.countBatch(Seq.empty) === Map.empty)
-    assert(s.topKBm25Batch(Seq.empty).collect().isEmpty)
-    assert(s.topKBm25Batch(Seq.empty).columns.toSeq === Seq("qi", "docId", "score"))
+    assert(s.msearchCounts(Seq.empty).collect().isEmpty)
+    assert(s.msearch(Seq.empty).collect().isEmpty)
+    assert(s.msearch(Seq.empty).columns.toSeq === Seq("qi", "docId", "score"))
+    assert(s.msearchCounts(Seq.empty).columns.toSeq === Seq("qi", "cnt"))
   }
 
   test("LRU: hot shapes survive shape churn past the cap") {

@@ -77,9 +77,9 @@ class StreamingIndexerSpec extends AnyFunSuite {
     q.stop()
 
     val s = new Searcher(spark, dir)
-    assert(s.countMulti(Seq("body" -> "alpha")) == 3) // docs 1,3,4
-    assert(s.countMulti(Seq("body" -> "alpha", "lang" -> "en")) == 2) // 1,3
-    assert(s.countMulti(Seq("body" -> "delta", "lang" -> "en | fr")) == 2) // 3,5
+    assert(s.count(Searcher.Where.Fields(Seq("body" -> "alpha"))) == 3) // docs 1,3,4
+    assert(s.count(Searcher.Where.Fields(Seq("body" -> "alpha", "lang" -> "en"))) == 2) // 1,3
+    assert(s.count(Searcher.Where.Fields(Seq("body" -> "delta", "lang" -> "en | fr"))) == 2) // 3,5
     assert(s.meta.numDocs == 5)
   }
 }
